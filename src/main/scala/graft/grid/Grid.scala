@@ -35,6 +35,14 @@ object Grid {
 
   val Nodata = -99999.0
 
+  /** The burn tie-break key of a point: its coordinates quantized to 3
+    * decimals (P4) and packed into one BIGINT, lon-major. It depends on the
+    * point alone, so the same point wins a collided cell under any row order
+    * or partitioning. The registry's SQL oracles spell the same expression:
+    * `CAST(round(lon * 1000) AS BIGINT) * 1000000 + CAST(round(lat * 1000) AS BIGINT)`. */
+  def tieKey(lon: Column, lat: Column): Column =
+    round(lon * 1000).cast("bigint") * 1000000L + round(lat * 1000).cast("bigint")
+
   /** W8: burn a point table (date, lon, lat, value, tieBreak) onto the grid.
     * Collisions resolve deterministically — lowest tieBreak wins (the
     * declared version of rasterio's burn-order last-wins, SURVEY.md W8).

@@ -1,5 +1,8 @@
 package graft.ml
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
 /** M2: geographically-weighted regression — per-point locally weighted least
   * squares, the declared capability of the reference's mgwr usage
   * (`src/codes/gwr_model.py:68-99`): for every prediction point, calibration
@@ -85,6 +88,34 @@ object GWR {
       c += 1
     }
     solve(xtx, xty)
+  }
+
+  /** The per-coordinate fit as a Spark step: one `fitAt` per distinct row of
+    * `coords` (two double columns, x then y) against the broadcast
+    * calibration set. Returns the coordinate columns under their own names
+    * plus coefficients `b0`…`bk`.
+    *
+    * The distinct set is repartitioned round-robin to the cluster's default
+    * parallelism before the fit. The coordinate frame is small in bytes, so
+    * AQE would coalesce its shuffle into one partition and the fit would
+    * run on one core; but every fit costs the same O(|calib|), so equal row
+    * counts per partition are equal work, and AQE leaves an explicit
+    * repartition alone. Each fit depends only on its coordinate, so the
+    * result does not depend on the partitioning. */
+  def coefficients(coords: DataFrame, calib: Array[Obs], bandwidth: Double): DataFrame = {
+    val spark = coords.sparkSession
+    import spark.implicits._
+    val Array(xc, yc) = coords.columns
+    val bcast = spark.sparkContext.broadcast(calib)
+    val fitted = coords.distinct()
+      .repartition(spark.sparkContext.defaultParallelism)
+      .as[(Double, Double)]
+      .mapPartitions { it =>
+        val c = bcast.value
+        it.map { case (x, y) => (x, y, fitAt(x, y, c, bandwidth)) }
+      }.toDF(xc, yc, "b")
+    val k = calib(0).f.length
+    fitted.select(col(xc) +: col(yc) +: (0 to k).map(j => col("b")(j).as(s"b$j")): _*)
   }
 
   /** Predict the target at (px, py) with features f*. */

@@ -74,7 +74,9 @@ object Forage {
     // stage 1's output is read four times below (F7 guard, calibration
     // collect, distinct-coordinate fit set, final scoring join) — cache it
     // rather than recompute the upstream composite 4×. CacheManager dedups
-    // by canonicalized plan, so repeated pipeline runs share one entry.
+    // by canonicalized plan, so repeated pipeline runs share one entry. The
+    // caller owns the entry: `ForageJob.run` unpersists it when the job
+    // ends, and the registry's FrameMemo keeps it as its stage-2 artifact.
     val input = combined.cache()
     // one action serves both the F7 empty guard and the calibration modulus
     // (r5 ran isEmpty + count as two separate jobs over the composite)
@@ -92,16 +94,9 @@ object Forage {
     val calib = calibSrc.select("lon", "lat", "sm", "preci", "ndvi")
       .as[(Double, Double, Double, Double, Double)].collect()
       .map(r => GWR.Obs(r._1, r._2, Array(r._3, r._4), r._5))
-    val bcast = spark.sparkContext.broadcast(calib)
-    val coefs = clean.select("lon", "lat").distinct()
-      .as[(Double, Double)]
-      .mapPartitions { it =>
-        val c = bcast.value
-        it.map { case (x, y) =>
-          val b = GWR.fitAt(x, y, c, bandwidth)
-          (x, y, b(0), b(1), b(2))
-        }
-      }.toDF("lon", "lat", "b0", "b1", "b2")
+    // one fit per distinct coordinate, spread evenly over every core
+    // (GWR.coefficients says why the split is by count, not by bytes)
+    val coefs = GWR.coefficients(clean.select("lon", "lat"), calib, bandwidth)
     clean.join(broadcast(coefs), Seq("lon", "lat"))
       .withColumn("pred", col("b0") + col("b1") * col("sm") + col("b2") * col("preci"))
       .withColumn("biom", (col("pred") * 6480.2 - 958.6) / 1000.0) // P6
@@ -121,13 +116,14 @@ object Forage {
       .withColumn("biom", (col("pred") * 6480.2 - 958.6) / 1000.0) // P6
 
   /** Stage 3 (rasterize): abs(round(biom,2)) (P7), burn points to the grid
-    * per date (W8), non-positive → nodata (P11). */
+    * per date (W8), non-positive → nodata (P11). Points that collide in one
+    * cell resolve by `Grid.tieKey`, so every execution burns the same value. */
   def stage3Rasterize(results: DataFrame, affine: Affine = Grid.Reference): DataFrame = {
     val pts = results
       .select(graft.core.DateOps.fromYyyymmdd(col("date")).as("date"),
               col("lon"), col("lat"),
               abs(round(col("biom"), 2)).as("value"), // P7
-              monotonically_increasing_id().as("tie"))
+              Grid.tieKey(col("lon"), col("lat")).as("tie"))
     Grid.burn(pts, affine)
   }
 

@@ -51,8 +51,15 @@ object ForageJob {
     * interrupted run and feed [[Progress.resume]]. */
   def run(spark: SparkSession, cfg: ForageConfig): Map[String, String] = {
     val combinedPath = s"${cfg.outputDir}/combined"
-    try runStages(spark, cfg, combinedPath)
-    catch {
+    var combined: Option[DataFrame] = None
+    try {
+      def src(path: String) = spark.read.parquet(path)
+      val stage1 = Forage.stage1Combined(
+        ndvi = src(cfg.ndviPath), sm = src(cfg.smPath), preci = src(cfg.preciPath),
+        anchor = cfg.anchor, watermark = watermark(cfg))
+      combined = Some(stage1)
+      runStages(spark, cfg, stage1, combinedPath)
+    } catch {
       case scala.util.control.NonFatal(e) =>
         val empty = spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -63,15 +70,18 @@ object ForageJob {
           Notify.failureEmail("Biomass not updated", String.valueOf(e.getMessage),
             Notify.defaultTemplate, "forage-etl", Nil).getBytes("UTF-8"))
         throw e
+    } finally {
+      // stage 2 caches stage 1's output; the job releases it whether it
+      // finished or failed, so nothing it computed outlives the run
+      combined.foreach(_.unpersist(blocking = true))
     }
   }
 
-  private def runStages(spark: SparkSession, cfg: ForageConfig,
+  /** Each stage runs once: stages 1–3 are forced by their own parquet
+    * writes, and every later reader (raster sink, stage 4, stage 5) reads
+    * the written handoff back instead of re-running the lineage behind it. */
+  private def runStages(spark: SparkSession, cfg: ForageConfig, combined: DataFrame,
                         combinedPath: String): Map[String, String] = {
-    def src(path: String) = spark.read.parquet(path)
-    val combined = Forage.stage1Combined(
-      ndvi = src(cfg.ndviPath), sm = src(cfg.smPath), preci = src(cfg.preciPath),
-      anchor = cfg.anchor, watermark = watermark(cfg))
     val scored = Forage.stage2Score(spark, combined, cfg.bandwidth)
     val cells = Forage.stage3Rasterize(scored)
     val out = scala.collection.mutable.Map[String, String]()
@@ -101,7 +111,8 @@ object ForageJob {
     val fmt = java.time.format.DateTimeFormatter.BASIC_ISO_DATE
     // read the just-written date-partitioned parquet back, NOT the cells
     // lineage: each per-date filter then prunes to one partition directory
-    // instead of re-running stages 1-3 once per date
+    // instead of re-running stages 2-3 once per date, and stage 4 below
+    // reads the same cells
     val cellsBack = spark.read.parquet(cellsPath)
     val dates = cellsBack.select("date").distinct().orderBy("date")
       .collect().map(_.getDate(0))
@@ -131,7 +142,9 @@ object ForageJob {
     }
 
     if (cfg.zones.nonEmpty) {
-      val zonal = Forage.stage4Zonal(spark, cells, cfg.zones)
+      // the zonal cascade reads its cells three times (base, centroid and
+      // 3×3 legs); from the handoff that is three scans, not three GWR fits
+      val zonal = Forage.stage4Zonal(spark, cellsBack, cfg.zones)
       val trendsPath = s"${cfg.outputDir}/trends"
       zonal.write.mode("overwrite").partitionBy("date").parquet(trendsPath) // ≙ woredas.h5
       out += "trends" -> trendsPath
@@ -179,8 +192,9 @@ object ForageJob {
     spark.stop()
   }
 
-  /** Harness wiring shared by main() and the spec. */
-  def runOnHarness(spark: SparkSession, sfDir: String, outputDir: String): Map[String, String] = {
+  /** Harness wiring shared by main() and the specs: writes the three
+    * event-derived sources under `outputDir` and returns the job's config. */
+  def harnessConfig(spark: SparkSession, sfDir: String, outputDir: String): ForageConfig = {
     val e = Tables.events(spark, sfDir)
       .select((lit(36.0) + (col("user_id") % 15).cast("double") * 0.1).as("lon"),
               (lit(15.0) - floor(col("user_id") / 15).cast("double") * 0.1).as("lat"),
@@ -192,7 +206,7 @@ object ForageJob {
         .write.mode("overwrite").parquet(p)
       p
     }
-    val cfg = ForageConfig(
+    ForageConfig(
       ndviPath = write("view", 0.001, "ndvi"),
       smPath = write("click", 0.01, "sm"),
       preciPath = write("purchase", 0.1, "preci"),
@@ -202,6 +216,9 @@ object ForageJob {
       zones = Seq(
         "Z_WEST" -> "POLYGON((35.95 15.05, 36.75 15.05, 36.75 13.9, 35.95 13.9, 35.95 15.05))",
         "Z_EAST" -> "POLYGON((36.75 15.05, 37.55 15.05, 37.55 13.9, 36.75 13.9, 36.75 15.05))"))
-    run(spark, cfg)
   }
+
+  /** `run` over the sources and config of [[harnessConfig]]. */
+  def runOnHarness(spark: SparkSession, sfDir: String, outputDir: String): Map[String, String] =
+    run(spark, harnessConfig(spark, sfDir, outputDir))
 }

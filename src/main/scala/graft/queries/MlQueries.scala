@@ -169,8 +169,8 @@ object MlQueries {
 
     // M2 + P6 + P7: GWR scoring. Scale design: GWR coefficients depend only
     // on the (quantized — P4) coordinates, so we fit one WLS system per
-    // DISTINCT coordinate cell on the executors (broadcast calibration),
-    // then broadcast-join the small coefficient table back and score every
+    // DISTINCT coordinate cell on the executors (broadcast calibration;
+    // `GWR.coefficients`, the step stage 2 uses), then broadcast-join the small coefficient table back and score every
     // row with a pure column expression. Fact rows are never shuffled and
     // the kernel work is O(cells × calib), not O(rows × calib) — at sf0.1
     // that is 2.5k × 16k instead of 600k × 16k (a ~240× cut).
@@ -207,18 +207,7 @@ object MlQueries {
         val calib = calibSrc
           .as[(Long, Double, Double, Double, Double, Double)].collect()
           .map(r => GWR.Obs(r._2, r._3, Array(r._4, r._5), r._6))
-        val bcast = s.sparkContext.broadcast(calib)
-        val bw = 10.0
-        val coefs = pts.select("px", "py").distinct()
-          .as[(Double, Double)]
-          .mapPartitions { it =>
-            val c = bcast.value
-            it.map { case (px, py) =>
-              val b = GWR.fitAt(px, py, c, bw)
-              (px, py, b(0), b(1), b(2))
-            }
-          }
-          .toDF("px", "py", "b0", "b1", "b2")
+        val coefs = GWR.coefficients(pts.select("px", "py"), calib, bandwidth = 10.0)
         pts.join(broadcast(coefs), Seq("px", "py"))
           .withColumn("pred", col("b0") + col("b1") * col("f1") + col("b2") * col("f2"))
           .withColumn("biom", abs(round((col("pred") * 6480.2 - 958.6) / 1000.0, 2)))

@@ -84,7 +84,7 @@ object PipelineQueries {
           graft.core.DateOps.fromYyyymmdd(col("date")).as("date"),
           col("lon"), col("lat"),
           abs(round(col("biom"), 2)).as("value"), // P7
-          expr("CAST(round(lon * 1000) AS BIGINT) * 1000000 + CAST(round(lat * 1000) AS BIGINT)").as("tie"))
+          graft.grid.Grid.tieKey(col("lon"), col("lat")).as("tie"))
         val cells = graft.grid.Grid.burn(pts, graft.grid.Grid.Reference)
         val cents = cells.withColumn("value",
           when(col("value") === graft.grid.Grid.Nodata, col("value"))
@@ -122,7 +122,7 @@ object PipelineQueries {
           graft.core.DateOps.fromYyyymmdd(col("date")).as("date"),
           col("lon"), col("lat"),
           abs(round(col("biom"), 2)).as("value"), // P7
-          expr("CAST(round(lon * 1000) AS BIGINT) * 1000000 + CAST(round(lat * 1000) AS BIGINT)").as("tie"))
+          graft.grid.Grid.tieKey(col("lon"), col("lat")).as("tie"))
         val cells = graft.grid.Grid.burn(pts, graft.grid.Grid.Reference)
         val cents = cells.withColumn("value",
           when(col("value") === graft.grid.Grid.Nodata, col("value"))

@@ -1,7 +1,10 @@
 package graft
 
 import java.nio.file.Files
-import graft.pipeline.ForageJob
+import graft.pipeline.{Forage, ForageConfig, ForageJob}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The configured 5-stage job (the reference's scheduled entrypoint):
@@ -51,6 +54,56 @@ class ForageJobSpec extends AnyFunSuite {
     assert(eml.contains("<li>biomass_20240116.tif</li>"))
     val check = new java.io.File(out, "Output_check")
     assert(check.isDirectory && check.list().isEmpty)
+  }
+
+  private val harnessSf = "/root/testdata/sf0.001"
+
+  /** Stage 1's frame for `cfg`, built anew: the same plan `run` builds, so
+    * its storage level shows whether the job left that plan cached. */
+  private def stage1(cfg: ForageConfig) = {
+    def src(p: String) = spark.read.parquet(p)
+    Forage.stage1Combined(src(cfg.ndviPath), src(cfg.smPath), src(cfg.preciPath),
+      cfg.anchor, ForageJob.watermark(cfg))
+  }
+
+  test("stage 4 reads the written cells; the job releases what it cached") {
+    val out = Files.createTempDirectory("graft_job_handoff").toFile.getAbsolutePath
+    val cfg = ForageJob.harnessConfig(spark, harnessSf, out)
+    val paths = ForageJob.run(spark, cfg)
+
+    // the handoff row counts of the harness run
+    val counts = Seq("combined", "cells", "trends", "forecasts")
+      .map(k => k -> spark.read.parquet(paths(k)).count()).toMap
+    assert(counts == Map("combined" -> 15L, "cells" -> 15L, "trends" -> 2L, "forecasts" -> 6L))
+
+    // the written trends are stage 4 over the written cells
+    def rows(df: DataFrame) = df.orderBy("zone_id", "date").collect()
+      .map(r => r.getValuesMap[Any](df.columns.toSeq)).toSeq
+    val trends = spark.read.parquet(paths("trends"))
+    val written = rows(trends)
+    val fromCells = rows(Forage.stage4Zonal(spark, spark.read.parquet(paths("cells")), cfg.zones)
+      .select(trends.columns.toSeq.map(col): _*))
+    assert(written.length == fromCells.length)
+    written.zip(fromCells).foreach { case (w, c) =>
+      // a zonal mean may differ in its last bit with Spark's summation order
+      assert(math.abs(w("mean_value").asInstanceOf[Double] - c("mean_value").asInstanceOf[Double]) < 1e-9)
+      assert((w - "mean_value") == (c - "mean_value"), s"trend row $w != $c")
+    }
+
+    // stage 2 cached stage 1's output; run released it
+    assert(stage1(cfg).storageLevel == StorageLevel.NONE)
+  }
+
+  test("a failure after stage 2 still releases the job's cache") {
+    val out = Files.createTempDirectory("graft_job_fail_late").toFile.getAbsolutePath
+    // stages 1-3 succeed; stage 4 cannot parse the zone
+    val cfg = ForageJob.harnessConfig(spark, harnessSf, out)
+      .copy(zones = Seq("Z_BAD" -> "POLYGON((not a polygon))"))
+    intercept[NumberFormatException] { ForageJob.run(spark, cfg) }
+    val eml = new String(Files.readAllBytes(
+      new java.io.File(out, "notification.eml").toPath), "UTF-8")
+    assert(eml.contains("Notice: Biomass Data Failed to Update:"))
+    assert(stage1(cfg).storageLevel == StorageLevel.NONE)
   }
 
   test("K8 failure contract: truncate downstream, drop the failure notice, rethrow") {

@@ -63,6 +63,20 @@ class ForageSpec extends AnyFunSuite {
     assert(math.abs(r0.getDouble(3) - 1.79) < 1e-9) // P7 round(biom, 2)
   }
 
+  test("stage 3: a collided cell burns the same point under any row order or partitioning") {
+    // both points fall in cell (234, 68); only their values differ
+    val a = (39.41, 3.271, 20240101L, 1.5)
+    val b = (39.445, 3.261, 20240101L, 2.5)
+    def burned(rows: Seq[(Double, Double, Long, Double)], parts: Int): Seq[Double] = {
+      val results = rows.toDF("lon", "lat", "date", "biom")
+      Forage.stage3Rasterize(if (parts == 1) results.coalesce(1) else results.repartition(parts))
+        .collect().map(_.getDouble(3)).toSeq
+    }
+    val runs = for (rows <- Seq(Seq(a, b), Seq(b, a)); parts <- Seq(1, 2)) yield burned(rows, parts)
+    // the lower quantized-coordinate key (a's lon) wins every time
+    assert(runs.forall(_ == Seq(1.5)), s"burned values by order/partitioning: $runs")
+  }
+
   test("stage 3 + P11: non-positive biomass burns as nodata") {
     val results = Seq((39.41, 3.271, 20240101L, 0.0)).toDF("lon", "lat", "date", "biom")
     val out = Forage.stage3Rasterize(results).collect()
