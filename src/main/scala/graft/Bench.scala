@@ -3,9 +3,65 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object Bench {
+
+  /** One run of `q`, counted: its seconds, or the class of what it threw.
+    * A failure is never a time: a query that dies fast must not read as a
+    * speedup. */
+  def timeRun(q: Q, spark: SparkSession, sfDir: String): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { q.run(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(e.getClass.getName) }
+  }
+
+  // Same-window host-rate control (round-10 verdict #2): a FIXED synthetic
+  // Spark job — 48M-row range, one hash shuffle to 9973 keys, a 1-row
+  // final agg — independent of the registry, the SF dir, and the page
+  // cache. Sampled at every pass boundary; the median calibrates the
+  // host's rate in the exact window the census ran, so cross-round
+  // absolute totals stop needing a manual re-bench adjudication:
+  // normalized_total = total * (CONTROL_REF / control_median).
+  // CONTROL_REF was pinned at 0.62 in r11 on the reference host state —
+  // rebaseline only if the control WORKLOAD or the session's compilation
+  // regime changes, never per round to launder a slow window. Round 12
+  // re-pinned it to 0.26: the codegen-cache fix (see Session.registry) moved
+  // EVERY full-registry session to the deep-JIT plateau the control previously
+  // only reached in few-query sessions (measured 0.264/0.294 in the two
+  // post-fix runs vs 0.62-0.88 in every pre-fix full census), so the old
+  // reference now describes a compilation regime that no longer exists.
+  // r12+ normalized totals are comparable to each other; comparison to
+  // the r11 history goes through RAW totals (same host) — the
+  // discontinuity is documented in PLANS.md and BASELINE.md.
+  // VALIDITY DOMAIN (round 12, see PLANS.md "control validity domain" and
+  // `graft.tools.Trace control`): the control also tracks in-session
+  // JIT/profile maturity — in a quiet session its own samples decay
+  // 0.72->0.30s, and long few-query SPARK_GRAFT_ONLY subset sessions read
+  // 0.27-0.43. Full-registry sessions hold the 0.62-0.88 band the ref was
+  // pinned in, so normalized_total is comparable ONLY between full-registry
+  // runs; for subset runs treat control as window-health info and compare
+  // RAW within one same-config column.
+  val ControlRef = 0.26
+  def controlSec(spark: SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 48000000L, 1L, 32)
+      .selectExpr("id % 9973 AS k", "id AS v")
+      .groupBy("k").count()
+      .selectExpr("sum(k * count)").collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** Warms the JVM/codegen and the table file cache once, outside any timed
+    * region: the first job in a fresh session otherwise pays ~5-10s of
+    * classloading that has nothing to do with any particular query. */
+  def warmTables(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000).selectExpr("id % 10 AS k", "id AS v")
+      .groupBy("k").count().count()
+    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
+        "region", "events", "documents", "embeddings")
+      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Dev-only subset filter (regex on query name); unset = full registry.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)
     // Cold-cache mode (round-9 judge condition on the two-part bar): one
@@ -16,116 +72,14 @@ object Bench {
     // exactly the cache/memo subsidy. Output goes to BENCH_COLD.json;
     // BENCH_LOCAL.json stays the steady-state census.
     val cold = sys.env.get("SPARK_GRAFT_COLD").contains("1")
-    // Shuffle blocks on tmpfs, uncompressed: same rationale as the stream
-    // harness's /dev/shm checkpoints — the cluster-shape analog is NVMe-
-    // local shuffle storage, and at bench SFs the LZ4 round-trip plus disk
-    // write latency is pure fixed overhead (measured −9% on the full
-    // registry at sf0.1; sf1 shuffle volume is well under the tmpfs bound).
-    // NOT sized for XL SFs: at sf100 the uncompressed shuffle set reaches
-    // ~90 GB and the kernel OOM-kills the JVM — for those columns override
-    // via SPARK_GRAFT_EXTRA_CONF (disk local.dir + LZ4 + more shuffle
-    // partitions; see SCALING.md "row-bound third decade").
-    val localDir = new java.io.File("/dev/shm/graft_spark_local")
-    localDir.mkdirs()
+    val spark = Session.build(Session.registry(Session.cpus))
     def shmUsedMb(): Long = {
       def du(f: java.io.File): Long =
         if (f.isFile) f.length()
         else Option(f.listFiles()).map(_.map(du).sum).getOrElse(0L)
-      du(localDir) / (1024 * 1024)
+      du(new java.io.File(Session.LocalDir)) / (1024 * 1024)
     }
-    var builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", localDir.getPath)
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      // Round 12: Spark's generated-class cache holds 100 entries by
-      // default; a 247-query registry overflows it every pass, so every
-      // whole-stage-codegen unit re-ran Janino compilation on every
-      // invocation — THE session-rate disease PLANS.md's "control validity
-      // domain" measured (full-registry control 0.62-0.88 vs 0.27-0.30 in
-      // few-query sessions). Sized to hold the registry's classes once:
-      // same-window A/B at sf0.1 read raw 135.9 → 101.6s (-25%) with the
-      // control itself settling to the quiet-session plateau (0.656 →
-      // 0.264). Not a local[32] trick: any production driver running
-      // hundreds of distinct query shapes pays the same recompilation tax.
-      // Static conf — must be set before the first session; EXTRA_CONF
-      // below can still override it for A/Bs.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // Round 13: cached-plan partition sizing. Memoized builder frames were
-      // cached at 32-64 partitions regardless of size, so every downstream
-      // stage scheduled 32-64 near-empty tasks (~3-5ms launch each) and the
-      // concurrent broadcast futures multiplied that (the 32-vs-8-core
-      // inversion, VERDICT r12 #1). Letting AQE re-optimize cached plans and
-      // size coalesced partitions by the ADVISORY BYTE TARGET (not the core
-      // count) makes the partition count track the data: tiny dimension
-      // builds collapse to 1-2 partitions, 100TB frames still get
-      // bytes/64MB at full parallelismFirst semantics. The floor is
-      // minPartitionSize=2m (stock parallelismFirst=true, so big shuffles
-      // keep bytes/parallelism sizing and heavy builds stay parallel; A/B'd
-      // against parallelismFirst=false+64MB advisory and a 4m floor — 2m
-      // kept every tiny-frame win while leaving medium shuffles parallel
-      // enough, the best full-registry total of the three). Inert at scale:
-      // bytes/parallelism >> 2MB on any real input, and a sub-2MB task is
-      // launch overhead on any hardware. Compute-dense iterated frames
-      // additionally pin their parallelism explicitly in their builders
-      // (repartition(P, key)) because a byte-based coalescer cannot see
-      // per-row compute density or explode amplification.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "2m")
-      .config("spark.ui.enabled", "false")
-    // dev A/B lever: SPARK_GRAFT_EXTRA_CONF="k1=v1;k2=v2"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); builder = builder.config(k, v)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Same-window host-rate control (round-10 verdict #2): a FIXED synthetic
-    // Spark job — 48M-row range, one hash shuffle to 9973 keys, a 1-row
-    // final agg — independent of the registry, the SF dir, and the page
-    // cache. Sampled at every pass boundary; the median calibrates the
-    // host's rate in the exact window the census ran, so cross-round
-    // absolute totals stop needing a manual re-bench adjudication:
-    // normalized_total = total * (CONTROL_REF / control_median).
-    // CONTROL_REF was pinned at 0.62 in r11 on the reference host state —
-    // rebaseline only if the control WORKLOAD or the session's compilation
-    // regime changes, never per round to launder a slow window. Round 12
-    // re-pinned it to 0.26: the codegen-cache fix above moved EVERY
-    // full-registry session to the deep-JIT plateau the control previously
-    // only reached in few-query sessions (measured 0.264/0.294 in the two
-    // post-fix runs vs 0.62-0.88 in every pre-fix full census), so the old
-    // reference now describes a compilation regime that no longer exists.
-    // r12+ normalized totals are comparable to each other; comparison to
-    // the r11 history goes through RAW totals (same host) — the
-    // discontinuity is documented in PLANS.md and BASELINE.md.
-    // VALIDITY DOMAIN (round 12, see PLANS.md "control validity domain" and
-    // graft.ControlProbe): the control also tracks in-session JIT/profile
-    // maturity — in a quiet session its own samples decay 0.72->0.30s, and
-    // long few-query SPARK_GRAFT_ONLY subset sessions read 0.27-0.43.
-    // Full-registry sessions hold the 0.62-0.88 band the ref was pinned in,
-    // so normalized_total is comparable ONLY between full-registry runs;
-    // for subset runs treat control as window-health info and compare RAW
-    // within one same-config column.
-    val ControlRef = 0.26
-    def controlSec(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 48000000L, 1L, 32)
-        .selectExpr("id % 9973 AS k", "id AS v")
-        .groupBy("k").count()
-        .selectExpr("sum(k * count)").collect()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // Warm the JVM/codegen and the table file cache once, outside the timed
-    // region: the first job in a fresh session otherwise pays ~5-10s of
-    // classloading that has nothing to do with any particular query.
-    spark.range(1000).selectExpr("id % 10 AS k", "id AS v")
-      .groupBy("k").count().count()
-    Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-        "region", "events", "documents", "embeddings")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+    warmTables(spark, sfDir)
     // JMH-style warmup: run every query once at the smallest SF so each
     // plan's generated code is JIT-compiled before the timed region —
     // otherwise ~2-5s of one-time codegen/JIT lands on whichever query
@@ -137,8 +91,9 @@ object Bench {
       case None     => SparkEntry.registry
     }
     registry.foreach { q =>
-      try q.run(spark, warmDir).count() catch { case _: Throwable => () }
-      finally spark.catalog.clearCache() // warm pass must not leave sf0.001 caches behind
+      timeRun(q, spark, warmDir).left.foreach(err =>
+        System.err.println(s"[bench] warm pass: ${q.name} failed: $err"))
+      spark.catalog.clearCache() // warm pass must not leave sf0.001 caches behind
     }
     // NOTE: the timed region deliberately does NOT clear the cache between
     // queries — best-of-3 reuses each query's own cached intermediates
@@ -153,13 +108,16 @@ object Bench {
     // minutes apart — the per-query minimum then measures the operator, not
     // the window.
     val sampleTimes = Array.fill(registry.size)(Double.MaxValue)
+    // A query that throws in any pass is failed: it gets no time, stays out
+    // of `total` and `queries`, and is listed under `failed`.
+    val errors = Array.fill(registry.size)(Option.empty[String])
     if (cold) {
       // flush everything the warm pass built before the timed region
       spark.catalog.clearCache()
       graft.core.SessionMemo.dropSession(spark)
     }
-    controlSec() // untimed: JIT the control's own codegen before sampling
-    val controls = scala.collection.mutable.ArrayBuffer(controlSec())
+    controlSec(spark) // untimed: JIT the control's own codegen before sampling
+    val controls = scala.collection.mutable.ArrayBuffer(controlSec(spark))
     val passes = if (cold) 1 else 3
     // mid-pass sample points: host-rate windows are multi-second, so a
     // median over pass boundaries alone (4 samples) can sit inside one bad
@@ -168,28 +126,33 @@ object Bench {
     val mid = registry.size / 2
     for (_ <- 1 to passes) {
       registry.zipWithIndex.foreach { case (q, i) =>
-        val t0 = System.nanoTime()
-        try { q.run(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (dt < sampleTimes(i)) sampleTimes(i) = dt
+        val run = timeRun(q, spark, sfDir)
+        run match {
+          case Right(dt) => if (dt < sampleTimes(i)) sampleTimes(i) = dt
+          case Left(err) => errors(i) = Some(err)
+        }
         if (cold) {
           spark.catalog.clearCache()
           val evicted = graft.core.SessionMemo.dropSession(spark)
           // stderr only (driver parses stdout's final line): per-query cold
           // trace — elapsed, memo entries this query had rebuilt, and /dev/shm
           // usage, so a pathological cold census is attributable in-flight.
+          val took = run.fold(err => s"failed: $err", dt => f"$dt%8.3fs")
           System.err.println(
-            f"[cold] ${q.name}%-36s ${dt}%8.3fs evicted=$evicted shm_mb=${shmUsedMb()}")
+            f"[cold] ${q.name}%-36s $took evicted=$evicted shm_mb=${shmUsedMb()}")
         }
-        if (i == mid) controls += controlSec()
+        if (i == mid) controls += controlSec(spark)
       }
-      controls += controlSec() // one sample per pass boundary
+      controls += controlSec(spark) // one sample per pass boundary
     }
     val control = controls.sorted.apply(controls.size / 2) // median
-    val results = registry.zipWithIndex.map { case (q, i) => q.name -> sampleTimes(i) }
+    val results = registry.indices.filter(errors(_).isEmpty)
+      .map(i => registry(i).name -> sampleTimes(i))
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     val full = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    val failed = registry.indices.flatMap(i => errors(i).map(err =>
+      s"""{"query":"${registry(i).name}","error":"$err"}""")).mkString("[", ",", "]")
     // Subset runs (SPARK_GRAFT_ONLY) are dev A/Bs: never clobber the
     // committed full-registry BENCH_LOCAL.json with a 3-query file (the
     // plan guard reads it as the registry census).
@@ -200,7 +163,7 @@ object Bench {
     if (only.isEmpty) {
       val outFile = if (cold) "BENCH_COLD.json" else "BENCH_LOCAL.json"
       try java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile),
-        s"""{"metric":"total","value":$total,"unit":"sec","mode":"${if (cold) "cold" else "steady"}",$controlFields,"queries":$full,"sf":"$sfDir"}""")
+        s"""{"metric":"total","value":$total,"unit":"sec","mode":"${if (cold) "cold" else "steady"}",$controlFields,"queries":$full,"failed":$failed,"sf":"$sfDir"}""")
       catch { case _: Throwable => () }
     }
     // The driver keeps only the last 2000 chars of stdout and parses the
@@ -210,13 +173,15 @@ object Bench {
     // many per-query entries as fit (slowest first, 2-decimal secs) under a
     // hard line budget; the fast remainder is summarized as omitted_total so
     // the sum is still reconstructible. Full precision for every query is in
-    // BENCH_LOCAL.json (committed).
+    // BENCH_LOCAL.json (committed). The `failed` list is never cut, so it
+    // takes its share of the budget before any per-query entry does.
     def r2(v: Double): String = (math.rint(v * 100) / 100).toString
     val lineBudget = 1870
     val head = s"""{"metric":"total","value":${r2(total)},"unit":"sec","n":${results.size},$controlFields,"sf":"$sfDir","queries":{"""
     val sorted = results.sortBy(-_._2)
     val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    var used = head.length + 60 // reserve for closing brace + omitted fields
+    // reserve for closing brace + omitted fields + the failed list
+    var used = head.length + 60 + failed.length
     var omitted = 0.0
     var omittedN = 0
     sorted.foreach { case (k, v) =>
@@ -225,7 +190,7 @@ object Bench {
       else { omitted += v; omittedN += 1 }
     }
     val line = head + entries.mkString(",") +
-      s"""},"omitted_n":$omittedN,"omitted_total":${r2(omitted)}}"""
+      s"""},"omitted_n":$omittedN,"omitted_total":${r2(omitted)},"failed":$failed}"""
     spark.stop()
     // single compact FINAL stdout line, after spark.stop() so no shutdown
     // logging can land after it

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -28,7 +27,7 @@ object PlanAudit {
     * cache hit reads the materialized columnar buffers, it does not re-run
     * the builder subtree. ReusedExchange and SinglePartition collects are
     * excluded, matching the string-count column's definition. */
-  private def runtimeShuffles(p: SparkPlan): Int = p match {
+  def runtimeShuffles(p: SparkPlan): Int = p match {
     // inputPlan is pre-EnsureRequirements (no exchanges yet); executedPlan
     // on a fresh, unexecuted AQE root is the INITIAL plan with exchanges
     case a: AdaptiveSparkPlanExec => runtimeShuffles(a.executedPlan)
@@ -42,16 +41,15 @@ object PlanAudit {
     case other => other.children.map(runtimeShuffles).sum
   }
 
+  /** Hash/range shuffles in a plan's text; a cached subtree that appears
+    * twice counts twice. */
+  def shuffles(plan: String): Int =
+    "Exchange hashpartitioning".r.findAllIn(plan).length +
+      "Exchange rangepartitioning".r.findAllIn(plan).length
+
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.build(Session.registry(Session.cpus), logLevel = "ERROR")
     println("| query | shuffles | runtime | joins | pushed filters |")
     println("|---|---|---|---|---|")
     SparkEntry.registry.foreach { q =>
@@ -59,7 +57,6 @@ object PlanAudit {
         val df = q.run(spark, sfDir)
         val plan = df.queryExecution.executedPlan.toString
         def count(s: String) = s.r.findAllIn(plan).length
-        val shuffles = count("Exchange hashpartitioning") + count("Exchange rangepartitioning")
         val joins = Seq(
           "BroadcastHashJoin" -> count("BroadcastHashJoin"),
           "SortMergeJoin" -> count("SortMergeJoin"),
@@ -73,7 +70,7 @@ object PlanAudit {
         val warm =
           try { df.count(); runtimeShuffles(q.run(spark, sfDir).queryExecution.executedPlan).toString }
           catch { case e: Throwable => s"- (run error: ${e.getMessage.take(30)})" }
-        println(s"| `${q.name}` | $shuffles | $warm | ${if (joins.isEmpty) "-" else joins} | $pushed |")
+        println(s"| `${q.name}` | ${shuffles(plan)} | $warm | ${if (joins.isEmpty) "-" else joins} | $pushed |")
       } catch {
         case e: Throwable => println(s"| `${q.name}` | plan error: ${e.getMessage.take(40)} | | | |")
       } finally spark.catalog.clearCache() // .cache() registers at plan time

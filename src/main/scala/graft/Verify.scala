@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,38 +10,7 @@ object Verify {
     // The driver always passes exactly two args and gets the full registry.
     val only = args.lift(2).map(_.r)
     def keep(name: String): Boolean = only.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // size the generated-class cache to the registry (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // Round 13: cached-plan partition sizing. Memoized builder frames were
-      // cached at 32-64 partitions regardless of size, so every downstream
-      // stage scheduled 32-64 near-empty tasks (~3-5ms launch each) and the
-      // concurrent broadcast futures multiplied that (the 32-vs-8-core
-      // inversion, VERDICT r12 #1). Letting AQE re-optimize cached plans and
-      // size coalesced partitions by the ADVISORY BYTE TARGET (not the core
-      // count) makes the partition count track the data: tiny dimension
-      // builds collapse to 1-2 partitions, 100TB frames still get
-      // bytes/64MB at full parallelismFirst semantics. The floor is
-      // minPartitionSize=2m (stock parallelismFirst=true, so big shuffles
-      // keep bytes/parallelism sizing and heavy builds stay parallel; A/B'd
-      // against parallelismFirst=false+64MB advisory and a 4m floor — 2m
-      // kept every tiny-frame win while leaving medium shuffles parallel
-      // enough, the best full-registry total of the three). Inert at scale:
-      // bytes/parallelism >> 2MB on any real input, and a sub-2MB task is
-      // launch overhead on any hardware. Compute-dense iterated frames
-      // additionally pin their parallelism explicitly in their builders
-      // (repartition(P, key)) because a byte-based coalescer cannot see
-      // per-row compute density or explode amplification.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "2m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.registry(Session.cpus))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.time.LocalDate
 
+import graft.Session
 import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -173,14 +174,7 @@ object ForageJob {
     * configured pipeline. Args: `<sfDir> <outputDir>`. */
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outputDir) = args
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.base(Session.cpus))
     val paths = runOnHarness(spark, sfDir, outputDir)
     paths.toSeq.sortBy(_._1).foreach { case (k, p) =>
       if (k == "layers") {

@@ -3,17 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (ScalaTest runs suites in one
-  * forked JVM; building a session per suite wastes ~5s each). */
+  * forked JVM; building a session per suite wastes ~5s each). Four cores
+  * whatever the host has, so test plans do not depend on it. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.build(Session.base(cpus = 4))
 }

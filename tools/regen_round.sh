@@ -13,7 +13,7 @@ sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/graft_verify_final" 
 python3 tools/check.py /root/testdata/sf0.01 /tmp/graft_verify_final 2>&1 | tail -3
 
 echo "=== 2. Bench sf0.1 ==="
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' | tail -1
 cp BENCH_LOCAL.json /tmp/bench_local_final_sf01.json
 
@@ -26,10 +26,10 @@ echo "=== 3b. cold-cache bench sf0.1, TWICE (ratification condition b + reproduc
 # that turned out to be an in-run host/JVM degradation (r12 reproduced ~280s
 # twice); a lone cold pass has no best-of-N noise absorption, so condition
 # (b) now requires the pair to agree before the number carries the bar.
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_COLD=1 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_COLD=1 \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' | tail -1
 cp BENCH_COLD.json /tmp/bench_cold_final_run1.json
-SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_COLD=1 \
+SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_COLD=1 \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' | tail -1
 cp BENCH_COLD.json /tmp/bench_cold_final_run2.json
 cp /tmp/bench_cold_final_run1.json BENCH_COLD.json
@@ -39,7 +39,7 @@ python3 tools/coldcmp.py /tmp/bench_local_final_sf01.json BENCH_COLD.json BENCHC
   /tmp/bench_cold_final_run2.json
 
 echo "=== 4. Bench sf1 ==="
-SPARK_GRAFT_SF_DIR=/tmp/sf1 SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_SF_DIR=/tmp/sf1 \
   sbt -batch "runMain graft.Bench" 2>&1 | grep '"metric"' | tail -1
 cp BENCH_LOCAL.json /tmp/bench_local_final_sf1.json
 cp /tmp/bench_local_final_sf1.json BENCH_sf1.json

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Dev-only: run a graft main (Bench/Verify/PlanAudit/Scratch) straight from
+# Dev-only: run a graft main (Bench/Verify/PlanAudit/tools.Trace) straight from
 # the compiled classes, bypassing the sbt launcher and its project lock —
 # lets long SPARK_GRAFT_ONLY subset benches run in parallel with sbt work.
 # Mirrors build.sbt's fork settings (JDK17 add-opens, heap, UTC, no UI).
@@ -14,5 +14,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $OPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx"${SPARK_DRIVER_MEM:-32g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$@"
